@@ -1,16 +1,19 @@
 """Seeded benchmark inputs whose amount of work does not depend on the seed.
 
-Documents follow the FIXTURES.md profile (plain, boilerplate-heavy,
-interleaved media, layout, mega documents and the fixed edge cases) and reuse
-the fixture generator's vocabulary.  The *shape* of the corpus -- which kind
-each document is, how many spans each has, how many words each span has, its
-punctuation, anchors and bounding boxes -- is drawn once from a fixed
-structure seed.  Every word is stored as a slot code of its length class
-(same character count and same UTF-8 byte count); the run seed only decides
-which word of that class each slot renders as.  So document count, per-kind
-document counts, span count and text bytes are identical across seeds, while
-the text itself changes.  The keep/drop decisions do not move either: the
-classifier's patterns are made of words outside the vocabulary.
+Documents come from the package's own fixture generator
+(``fixtures.generate.generate_documents``, the FIXTURES.md profile: plain,
+boilerplate-heavy, interleaved media, layout, mega documents and the fixed
+edge cases), always called with the same structure seed.  So which kind each
+document is, how many spans it has, its anchors and boxes, and the length of
+every word never change.  The run seed then re-words the corpus: each word of
+the generator's vocabulary, keeping its case, becomes its image under a
+seed-chosen permutation of its length class (same character count, same
+UTF-8 byte count).  Spans whose whole text is a boilerplate or short-junk
+string stay as they are.  Document count, per-kind document counts, span
+count and text bytes are therefore identical across seeds, while the text
+itself changes.  The permutation is one-to-one, so texts that were equal stay
+equal and texts that differed still differ, and the extraction output has
+the same span count for every seed.
 
 Vectors are clustered float32[64] points with uneven cluster sizes, drawn
 from the fixed structure seed; the run seed rotates the whole set by a random
@@ -21,8 +24,8 @@ its bucket sizes do move with the seed.
 
 from __future__ import annotations
 
-import os
 import random
+import re
 from collections import Counter
 
 import numpy as np
@@ -30,268 +33,127 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from vlm_ocr_doc_reader_spark.fixtures.generate import (
-    SPAN_ARROW_TYPE, _BOILER, _EDGE_DOCS, _SHORT_JUNK, _WORDS)
+    _BOILER, _SHORT_JUNK, _WORDS, generate_documents)
 
 STRUCTURE_SEED = 20261017
-SLOTS = 64              # slot codes per length class
-_PUA = 0xE000           # private-use code points hold the slot codes
-_DIGIT0 = 0xF000        # slot codes that render as one digit each
-
-_CLASSES = sorted({(len(w), len(w.encode())) for w in _WORDS})
-_CLASS_WORDS = [[w for w in _WORDS if (len(w), len(w.encode())) == c]
-                for c in _CLASSES]
-_CLASS_OF = {w: _CLASSES.index((len(w), len(w.encode()))) for w in _WORDS}
-# the per-kind share of ordinary documents, as an exact repeating schedule
-_SCHEDULE = ["plain"] * 12 + ["boiler"] * 3 + ["media"] * 3 + ["layout"] * 2
+_WORD = re.compile(r"[^\W\d_]+")
+_FIXED_TEXTS = frozenset(_BOILER) | frozenset(_SHORT_JUNK)
 
 
-class _Words:
-    """A stream of slot codes (one code point per word) drawn in bulk, so the
-    structure pass does not call the RNG once per word."""
-
-    _CHUNK = 1 << 20
-
-    def __init__(self, rng: random.Random):
-        self._gen = np.random.default_rng(rng.getrandbits(64))
-        self._cls = np.array([_CLASS_OF[w] for w in _WORDS])
-        self._s, self._p = "", 0
-
-    def take(self, n: int, cap_first: bool = False,
-             cap_all: bool = False) -> str:
-        if self._p + n > len(self._s):
-            cls = self._cls[self._gen.integers(0, len(_WORDS), self._CHUNK)]
-            codes = _PUA + (cls * SLOTS
-                            + self._gen.integers(0, SLOTS, self._CHUNK)) * 2
-            self._s = (self._s[self._p:]
-                       + codes.astype("<u4").tobytes().decode("utf-32-le"))
-            self._p = 0
-        s = self._s[self._p:self._p + n]
-        self._p += n
-        if cap_all:
-            return " ".join(chr(ord(c) + 1) for c in s)
-        if cap_first:
-            return " ".join(chr(ord(s[0]) + 1) + s[1:])
-        return " ".join(s)
-
-    @staticmethod
-    def digits(rng: random.Random, n: int) -> str:
-        return "".join(chr(_DIGIT0 + rng.randrange(SLOTS)) for _ in range(n))
+def _word_map(seed: int) -> dict:
+    """Every vocabulary word, lower-case and capitalized, to its image under
+    a seed-chosen permutation of its (characters, bytes) length class."""
+    classes: dict[tuple, list] = {}
+    for w in _WORDS:
+        classes.setdefault((len(w), len(w.encode())), []).append(w)
+    rng = random.Random(seed)
+    table = {}
+    for words in classes.values():
+        image = rng.sample(words, len(words))
+        for a, b in zip(words, image):
+            table[a], table[a.capitalize()] = b, b.capitalize()
+    return table
 
 
-def _sentence(rng: random.Random, words: _Words, lo: int = 4,
-              hi: int = 18) -> str:
-    return (words.take(rng.randint(lo, hi), cap_first=True)
-            + rng.choice([".", ".", ".", "!", "?"]))
+def reword(docs: list, seed: int) -> list:
+    """``docs`` with every vocabulary word replaced per ``_word_map(seed)``;
+    kinds, media refs, offsets and non-vocabulary text are kept."""
+    get = _word_map(seed).get
+
+    def sub(m):
+        s = m.group()
+        return get(s, s)
+
+    def text(t):
+        return t if t is None or t in _FIXED_TEXTS else _WORD.sub(sub, t)
+
+    return [(d, [(k, text(t), m, o) for k, t, m, o in spans])
+            for d, spans in docs]
 
 
-def _heading(rng: random.Random, words: _Words) -> str:
-    return words.take(rng.randint(1, 5), cap_all=True)
+def structure(n_docs: int, mega_spans: int) -> list:
+    """[(doc_id, [(kind, text, media_ref, offset), ...])]: the fixture
+    corpus of the structure seed.  The generator adds its 8 edge-case
+    documents and max(3, n_docs // 1000) mega documents of ``mega_spans``
+    spans each."""
+    return generate_documents(n_docs, seed=STRUCTURE_SEED,
+                              mega_spans=mega_spans)
 
 
-def _plain(rng, words):
-    out = []
-    for i in range(rng.randint(5, 50)):
-        r = rng.random()
-        if r < 0.12:
-            out.append(("heading", _heading(rng, words), None, i))
-        elif r < 0.2:
-            out.append(("text", rng.choice(_SHORT_JUNK), None, i))
-        else:
-            out.append(("text", _sentence(rng, words), None, i))
-    return out
+def documents(n_docs: int, mega_spans: int, seed: int) -> list:
+    """The structure corpus re-worded for ``seed``."""
+    return reword(structure(n_docs, mega_spans), seed)
 
 
-def _boiler(rng, words):
-    out = []
-    for i in range(rng.randint(20, 100)):
-        r = rng.random()
-        if r < 0.30:
-            out.append(("boilerplate", rng.choice(_BOILER), None, i))
-        elif r < 0.50:
-            out.append(("link", "read more about " + words.take(1), None, i))
-        elif r < 0.62:
-            out.append(("text", rng.choice(_BOILER), None, i))
-        elif r < 0.70:
-            out.append(("heading", _heading(rng, words), None, i))
-        else:
-            out.append(("text", _sentence(rng, words), None, i))
-    return out
+def doc_kind(doc_id: str, spans: list) -> str:
+    """The fixture kind a document was generated as, read off its spans."""
+    if doc_id.startswith("edge_"):
+        return "edge"
+    if len(spans) > 100:            # ordinary kinds stay at or under 100
+        return "mega"
+    if any(m is not None for _, _, m, _ in spans):
+        return "media"
+    if spans[0][1].startswith("@@bbox:"):
+        return "layout"
+    if any(k in ("boilerplate", "link") for k, _, _, _ in spans):
+        return "boiler"
+    return "plain"
 
 
-def _media(rng, words, doc_idx):
-    n_text = rng.randint(6, 30)
-    n_media = rng.randint(1, min(6, n_text))
-    refs = [f"{'img' if rng.random() < 0.7 else 'tbl'}_{doc_idx}_{k}"
-            for k in range(n_media)]
-    hosts = dict(zip(sorted(rng.sample(range(n_text), n_media)), refs))
-    out = []
-    for i in range(n_text):
-        t = _sentence(rng, words)
-        if i in hosts:
-            cut = rng.randint(0, len(t))
-            t = t[:cut] + f" [[{hosts[i]}]] " + t[cut:]
-        out.append(("text", t, None, i))
-    for k, ref in enumerate(refs):
-        kind = "image" if ref.startswith("img") else "table"
-        caption = _sentence(rng, words, 2, 6) if rng.random() < 0.5 else ""
-        out.append((kind, caption, ref, n_text + k))
-    if rng.random() < 0.2:  # dangling anchor to a missing media span
-        i = rng.randrange(n_text)
-        kind, t, m, off = out[i]
-        out[i] = (kind, t + f" [[img_{doc_idx}_missing]]", m, off)
-    return out
+def shape(docs: list) -> dict:
+    """The amounts of work one corpus carries."""
+    return {
+        "docs": len(docs),
+        "docs_per_kind": dict(sorted(Counter(
+            doc_kind(d, spans) for d, spans in docs).items())),
+        "spans": sum(len(spans) for _, spans in docs),
+        "text_bytes": sum(len(t.encode()) for _, spans in docs
+                          for _, t, _, _ in spans if t is not None),
+    }
 
 
-def _layout(rng, words):
-    blocks = []
-    for p in range(rng.randint(1, 3)):
-        y_base = p * 1100
-        blocks.append(("heading", _heading(rng, words),
-                       (100, y_base + 10, 900, y_base + 60)))
-        for x0 in (100, 520):
-            y = y_base + 100
-            for _ in range(rng.randint(2, 6)):
-                h = rng.randint(40, 120)
-                blocks.append(("text", _sentence(rng, words),
-                               (x0, y, x0 + 380, y + h)))
-                y += h + 20
-    rng.shuffle(blocks)
-    return [(kind, f"@@bbox:{x0},{y0},{x1},{y1}@@{text}", None, i)
-            for i, (kind, text, (x0, y0, x1, y1)) in enumerate(blocks)]
-
-
-def _mega(rng, words, n_spans):
-    out = []
-    for i in range(n_spans):
-        r = rng.random()
-        if r < 0.05:
-            out.append(("heading", _heading(rng, words), None, i))
-        elif r < 0.15:
-            out.append(("boilerplate", rng.choice(_BOILER), None, i))
-        else:
-            out.append(("text", _sentence(rng, words), None, i))
-    return out
-
-
-def _levels(rng, words):
+def levels_documents(n_docs: int, seed: int) -> list:
     """Sentences carrying digit identifiers, so the levels chain (scan ->
     resolve -> verify) has registry targets, mixed with boilerplate and
-    link spans the classifier drops."""
-    out = []
-    for j in range(rng.randint(3, 8)):
-        r = rng.random()
-        if r < 0.15:
-            out.append(("text", rng.choice(_BOILER), None, j))
-            continue
-        if r < 0.25:
-            out.append(("link", "read more about " + words.take(1), None, j))
-            continue
-        text = _sentence(rng, words, 4, 10)
-        if r < 0.7:
-            cut = text.index(" ") + 1
-            text = (text[:cut] + _Words.digits(rng, rng.randint(6, 12))
-                    + " " + text[cut:])
-        out.append(("text", text, None, j))
-    return out
-
-
-class DocTemplate:
-    """The seed-independent shape of a document corpus, kept as flat span
-    columns with texts written in slot codes; ``render(seed)`` turns the
-    texts into words."""
-
-    def __init__(self, n_docs: int, n_mega: int = 0, mega_spans: int = 0,
-                 levels: bool = False):
-        rng = random.Random(STRUCTURE_SEED + levels)
-        words = _Words(rng)
-        docs = [] if levels else [(d, "edge", sp) for d, sp in _EDGE_DOCS]
-        for i in range(n_docs):
-            if levels:
-                docs.append((f"lvl_{i:06d}", "levels", _levels(rng, words)))
-                continue
-            doc_id = f"doc_{i:08d}"
-            if i < n_mega:
-                docs.append((doc_id, "mega", _mega(rng, words, mega_spans)))
-                continue
-            kind = _SCHEDULE[i % len(_SCHEDULE)]
-            spans = (_plain(rng, words) if kind == "plain" else
-                     _boiler(rng, words) if kind == "boiler" else
-                     _media(rng, words, i) if kind == "media" else
-                     _layout(rng, words))
-            docs.append((doc_id, kind, spans))
-        self.doc_ids = [d for d, _, _ in docs]
-        self.doc_kinds = [k for _, k, _ in docs]
-        self.bounds = np.cumsum([0] + [len(sp) for _, _, sp in docs])
-        flat = [s for _, _, sp in docs for s in sp]
-        self.kinds, self.texts, self.refs, self.offsets = (
-            list(col) for col in zip(*flat))
-
-    def render(self, seed: int) -> list:
-        """The span texts for ``seed``, aligned with the flat columns."""
-        rng = random.Random(seed)
-        table = {}
-        for c, words in enumerate(_CLASS_WORDS):
-            for r in range(SLOTS):
-                w = rng.choice(words)
-                code = _PUA + (c * SLOTS + r) * 2
-                table[code] = w
-                table[code + 1] = w.capitalize()
-        for r in range(SLOTS):
-            table[_DIGIT0 + r] = str(rng.randrange(10))
-        return [None if t is None else t.translate(table) for t in self.texts]
-
-    def docs(self, texts: list) -> list:
-        """[(doc_id, [(kind, text, media_ref, offset), ...])], the oracle's
-        input shape."""
-        spans = list(zip(self.kinds, texts, self.refs, self.offsets))
-        b = self.bounds.tolist()
-        return [(d, spans[b[i]:b[i + 1]]) for i, d in enumerate(self.doc_ids)]
-
-    def shape(self, texts: list) -> dict:
-        """The amounts of work one rendering carries."""
-        return {
-            "docs": len(self.doc_ids),
-            "docs_per_kind": dict(sorted(Counter(self.doc_kinds).items())),
-            "spans": len(texts),
-            "text_bytes": sum(len(t.encode()) for t in texts
-                              if t is not None),
-        }
-
-    def table(self, texts: list) -> pa.Table:
-        structs = pa.StructArray.from_arrays(
-            [pa.array(self.kinds, pa.string()), pa.array(texts, pa.string()),
-             pa.array(self.refs, pa.string()),
-             pa.array(self.offsets, pa.int32())],
-            fields=list(SPAN_ARROW_TYPE.value_type))
-        spans = pa.ListArray.from_arrays(
-            pa.array(self.bounds, pa.int32()), structs)
-        return pa.table({"doc_id": pa.array(self.doc_ids, pa.string()),
-                         "spans": spans.cast(SPAN_ARROW_TYPE)})
-
-    def write(self, texts: list, path: str, shards: int) -> int:
-        """Round-robin parquet shards, so the mega documents land in
-        different files.  Returns the bytes written."""
-        os.makedirs(path, exist_ok=True)
-        table = self.table(texts)
-        n = len(self.doc_ids)
-        for s in range(shards):
-            pq.write_table(table.take(np.arange(s, n, shards)),
-                           f"{path}/part-{s:05d}.parquet",
-                           row_group_size=2000)
-        return sum(e.stat().st_size for e in os.scandir(path))
+    link spans the classifier drops.  The shape comes from the structure
+    seed; the run seed re-words the text and draws the digits."""
+    shape_rng = random.Random(STRUCTURE_SEED + 1)
+    docs = []
+    for i in range(n_docs):
+        spans = []
+        for j in range(shape_rng.randint(3, 8)):
+            r = shape_rng.random()
+            if r < 0.15:
+                spans.append(("text", shape_rng.choice(_BOILER), None, j))
+            elif r < 0.25:
+                spans.append(("link", "read more about "
+                              + shape_rng.choice(_WORDS), None, j))
+            else:
+                words = [shape_rng.choice(_WORDS)
+                         for _ in range(shape_rng.randint(4, 10))]
+                if r < 0.7:
+                    words.insert(1, "#" * shape_rng.randint(6, 12))
+                spans.append(("text", " ".join(words).capitalize() + ".",
+                              None, j))
+        docs.append((f"lvl_{i:06d}", spans))
+    digit = random.Random(seed)
+    return [(d, [(k, re.sub("#", lambda _: str(digit.randrange(10)), t),
+                  m, o) for k, t, m, o in spans])
+            for d, spans in reword(docs, seed)]
 
 
 def vote_samples(n_entities: int, seed: int) -> list:
     """(entity_id, axis_idx, value, context, status) rows for the vote
     operator: three axes per entity in a fixed mix of unanimous, 2-of-3,
     all-different, no-data and error cases; the seed picks the values."""
-    shape = random.Random(STRUCTURE_SEED + 2)
+    shape_rng = random.Random(STRUCTURE_SEED + 2)
     rng = random.Random(seed)
     rows = []
     for e in range(n_entities):
         base = "".join(rng.choice("0123456789") for _ in range(10))
         other = "".join(rng.choice("0123456789") for _ in range(10))
-        case = shape.choice(("same", "same", "two", "diff", "nodata", "err"))
+        case = shape_rng.choice(
+            ("same", "same", "two", "diff", "nodata", "err"))
         for axis in (1, 2, 3):
             value, status = base, "ok"
             if case == "two" and axis == 3 or case == "diff" and axis > 1:
@@ -307,13 +169,13 @@ def vote_samples(n_entities: int, seed: int) -> list:
 def vectors(n: int, n_clusters: int, dim: int, seed: int) -> np.ndarray:
     """(n, dim) float32 clustered points; only the rotation depends on
     ``seed``."""
-    shape = np.random.default_rng(STRUCTURE_SEED)
-    weights = shape.integers(1, 10, n_clusters).astype(float)
+    shape_rng = np.random.default_rng(STRUCTURE_SEED)
+    weights = shape_rng.integers(1, 10, n_clusters).astype(float)
     sizes = np.floor(weights / weights.sum() * n).astype(int)
     sizes[0] += n - sizes.sum()
-    centers = shape.normal(size=(n_clusters, dim))
-    spread = shape.uniform(0.2, 0.5, n_clusters)
-    pts = [centers[c] + spread[c] * shape.normal(size=(s, dim))
+    centers = shape_rng.normal(size=(n_clusters, dim))
+    spread = shape_rng.uniform(0.2, 0.5, n_clusters)
+    pts = [centers[c] + spread[c] * shape_rng.normal(size=(s, dim))
            for c, s in enumerate(sizes)]
     rot, _ = np.linalg.qr(np.random.default_rng(seed).normal(size=(dim, dim)))
     return (np.concatenate(pts) @ rot).astype(np.float32)

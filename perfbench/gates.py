@@ -8,7 +8,6 @@ same parquet file: ids and ranks exactly, cosines within 1e-6.
 
 from __future__ import annotations
 
-import multiprocessing as mp
 import os
 
 import pyarrow as pa
@@ -20,19 +19,15 @@ _OUT_SCHEMA = pa.schema([("doc_id", pa.string()),
                          ("spans", pa.list_(_OUT_SPAN))])
 
 
-def _oracle_chunk(docs):
+def oracle_rows(docs) -> list:
+    """[(doc_id, spans)] the oracle extracts from ``docs``."""
     from vlm_ocr_doc_reader_spark.extraction.oracle import extract_corpus
     return list(extract_corpus(docs).items())
 
 
-def expected_extraction(docs, processes: int) -> pa.Table:
-    """The oracle's output for ``docs`` as a table sorted by doc_id.  The
-    oracle is pure Python, so it runs on ``processes`` spawned workers."""
-    step = -(-len(docs) // processes)
-    chunks = [docs[i:i + step] for i in range(0, len(docs), step)]
-    with mp.get_context("spawn").Pool(len(chunks)) as pool:
-        parts = pool.map(_oracle_chunk, chunks)
-    rows = sorted(r for part in parts for r in part)
+def oracle_table(rows) -> pa.Table:
+    """Oracle rows as a table sorted by doc_id, in the output's schema."""
+    rows = sorted(rows)
     flat = [s for _, spans in rows for s in spans]
     cols = list(zip(*flat)) or [(), (), (), ()]
     structs = pa.StructArray.from_arrays(
@@ -72,20 +67,14 @@ def manifest_rows(state_dir: str) -> int:
 
 
 def vector_oracles(emb_path: str, ivf_sql: str, lsh_sql: str) -> dict:
-    """DuckDB results of both oracles plus the number of candidate pairs
-    each one scores (its ``cand`` relation)."""
+    """DuckDB results of both oracles over the parquet file."""
     import duckdb
     con = duckdb.connect()
     try:
         con.execute("CREATE VIEW embeddings AS SELECT * FROM "
                     f"read_parquet('{emb_path}')")
-        out = {}
-        for name, sql in (("ivf", ivf_sql), ("lsh", lsh_sql)):
-            out[name] = con.execute(sql).fetchdf()
-            head = sql[:sql.rindex("SELECT qid, nbr_id")]
-            out[name + "_pairs"] = con.execute(
-                head + "SELECT count(*) FROM cand").fetchone()[0]
-        return out
+        return {"ivf": con.execute(ivf_sql).fetchdf(),
+                "lsh": con.execute(lsh_sql).fetchdf()}
     finally:
         con.close()
 

@@ -13,9 +13,10 @@ outside its timed region.  Pass times go to standard error; the last line of
 standard output is one JSON object.
 
 ``--trace 0`` reports the end-to-end metrics.  ``--trace 1`` reports the
-per-layer metrics instead: it enables Spark's event log, alternates traced
-and untraced passes in the timed window, then times each layer's calls and
-reduces the event log by job group.  See perfbench/README.md.
+per-layer metrics instead: it enables Spark's event log, runs untraced and
+traced passes in the timed window in the order U T T U U T T U ..., then
+times each layer's calls and reduces the event log by job group.  See
+perfbench/README.md.
 """
 
 from __future__ import annotations
@@ -129,9 +130,8 @@ def measure(args, work):
     probes = [cpu_probe() for _ in range(3)]
     log(f"cpu probe before: {' '.join(f'{x:.4f}' for x in probes)}")
     if args.workload == "extract_mixed":
-        kw = {"n_docs": 1_000, "n_mega": 1} if args.small else {}
-        w = wl.ExtractMixed(os.path.join(work, "main"), args.seed,
-                            procs=os.cpu_count() or 1, **kw)
+        kw = {"n_docs": 1_000} if args.small else {}
+        w = wl.ExtractMixed(os.path.join(work, "main"), args.seed, **kw)
     else:
         w = wl.VectorTopk(os.path.join(work, "main"), args.seed,
                           **({"n": 300} if args.small else {}))
@@ -187,20 +187,24 @@ def _passes(spark, w, run, args, work, session_s, probes) -> tuple:
             stale = 0 if dt < (1 - WARM_TOL) * best else stale + 1
             best = min(best, dt)
 
-    timed, traced_times, gcs = [], [], []
+    timed, traced_times, tracer_s, gcs = [], [], [], []
     t_end = time.perf_counter() + args.seconds
     k = 0
     while run.failed <= MAX_FAILED and (time.perf_counter() < t_end or (
             tracer and min(len(timed), len(traced_times)) < TRACED_MIN_EACH)):
-        use = tracer if tracer and k % 2 else None
+        # U T T U: a trend over the window cancels between the two kinds
+        use = tracer if tracer and k % 4 in (1, 2) else None
         if use:
             use.begin_pass(f"t{k}", "main")
+            own = use.own_s
         dt = run.one_pass(w, spark, "timed", use,
                           keep=bool(use) and w.name == "extract_mixed")
         k += 1
         if dt is not None:
             (traced_times if use else timed).append(dt)
             gcs.append(run.last_gc_s)
+            if use:
+                tracer_s.append(use.own_s - own)
     after = [cpu_probe() for _ in range(3)]
     log(f"cpu probe after: {' '.join(f'{x:.4f}' for x in after)}")
     log("warm-up passes: " + " ".join(f"{x:.3f}" for x in warm))
@@ -216,8 +220,8 @@ def _passes(spark, w, run, args, work, session_s, probes) -> tuple:
     values, roles = traced.layer_metrics(
         spark, tracer, run, w, args, work, session_s=session_s,
         warmup_passes=len(warm), gcs=gcs, timed=timed,
-        traced_times=traced_times, cpu_probe_s=statistics.median(
-            probes + after))
+        traced_times=traced_times, tracer_s=tracer_s,
+        cpu_probe_s=statistics.median(probes + after))
     return values, (tracer.tags, roles)
 
 

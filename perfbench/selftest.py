@@ -22,28 +22,40 @@ sys.path[:0] = [HERE, ROOT]
 
 import corpus  # noqa: E402
 import gates  # noqa: E402
+import workloads  # noqa: E402
 
 SEEDS = (1, 2, 3)
 QUICK = "--quick" in sys.argv
 WORK = os.path.join(HERE, ".work")      # ignored by git, like run.py's
 
 
+def _expected(docs):
+    return gates.oracle_table(gates.oracle_rows(docs))
+
+
+def _spans_out(expected):
+    return sum(len(spans) for spans in expected["spans"].to_pylist())
+
+
 class SeedChangesContentNotAmount(unittest.TestCase):
     def test_document_amounts_equal_across_seeds(self):
-        tmpl = corpus.DocTemplate(600, n_mega=1, mega_spans=2_000)
-        renders = [tmpl.render(s) for s in SEEDS]
-        shapes = [tmpl.shape(t) for t in renders]
+        corpora = [corpus.documents(600, 1_000, s) for s in SEEDS]
+        shapes = [corpus.shape(docs) for docs in corpora]
         self.assertEqual(shapes[0], shapes[1])
         self.assertEqual(shapes[0], shapes[2])
-        self.assertGreater(shapes[0]["spans"], 0)
+        self.assertEqual(set(shapes[0]["docs_per_kind"]), {
+            "edge", "mega", "plain", "boiler", "media", "layout"})
         for a, b in ((0, 1), (0, 2), (1, 2)):
-            self.assertNotEqual(renders[a], renders[b])
+            self.assertNotEqual(corpora[a], corpora[b])
+        outs = {_spans_out(_expected(docs)) for docs in corpora}
+        self.assertEqual(len(outs), 1)
 
     def test_levels_shard_amounts_equal_across_seeds(self):
-        tmpl = corpus.DocTemplate(200, levels=True)
-        shapes = [tmpl.shape(tmpl.render(s)) for s in SEEDS]
+        corpora = [corpus.levels_documents(200, s) for s in SEEDS]
+        shapes = [corpus.shape(docs) for docs in corpora]
         self.assertEqual(shapes[0], shapes[1])
         self.assertEqual(shapes[0], shapes[2])
+        self.assertNotEqual(corpora[0], corpora[1])
 
     def test_vectors_keep_count_and_cosines(self):
         import numpy as np
@@ -70,13 +82,16 @@ class SameSeedSameBytes(unittest.TestCase):
 
     def test_documents_parquet_byte_identical(self):
         with tempfile.TemporaryDirectory(dir=WORK) as tmp:
-            digests = []
+            digests, expected = [], []
             for run in range(2):
-                tmpl = corpus.DocTemplate(300, n_mega=1, mega_spans=1_000)
                 path = os.path.join(tmp, f"d{run}")
-                tmpl.write(tmpl.render(7), path, shards=2)
+                expected.append(workloads.prepare_documents(
+                    path, 300, 7, shards=2)[1])
                 digests.append(self._digest(path))
             self.assertEqual(digests[0], digests[1])
+            self.assertTrue(expected[0].equals(expected[1]))
+            self.assertTrue(expected[0].equals(
+                _expected(corpus.documents(300, workloads.MEGA_SPANS, 7))))
 
     def test_vectors_parquet_byte_identical(self):
         with tempfile.TemporaryDirectory(dir=WORK) as tmp:
@@ -91,8 +106,7 @@ class SameSeedSameBytes(unittest.TestCase):
 class GateCatchesMismatch(unittest.TestCase):
     def test_one_span_mismatch_fails_extraction_gate(self):
         import pyarrow as pa
-        tmpl = corpus.DocTemplate(200, n_mega=0, mega_spans=0)
-        expected = gates.expected_extraction(tmpl.docs(tmpl.render(5)), 2)
+        expected = _expected(corpus.documents(200, 200, 5))
         self.assertEqual(gates.extraction_mismatches(expected, expected), 0)
         rows = expected.to_pylist()
         victim = next(r for r in rows if len(r["spans"]) > 2)

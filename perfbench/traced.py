@@ -2,22 +2,23 @@
 
 Every metric is measured in every traced run.  A layer on the workload's own
 path is measured on the workload's input; a layer the workload bypasses is
-measured on a small side input (1,000 documents or 300 vectors), and the
+measured on a small side input (1,008 documents or 300 vectors), and the
 classify / levels / vote layers on a fixed 150-document shard.  The
-extraction layer calls outside the CLI read the first parquet shard of the
-extraction input (2,002 documents on ``extract_mixed``, the whole side input
-on ``vector_topk``).  Times are medians of at least two traced passes or of
-three probe calls.  ``plans.extract.self_s`` is timed directly: the
-``extract()`` call runs the route probe and builds the plan, and the fused
-kernel runs only when its result is materialized, so no difference of two
-noisy medians is needed (one read -0.002 s on the 1,000-document side
-input).  Counts come from the benchmark's inputs and oracles
-or from Spark's event log, reduced by job group.
+extraction layer calls outside the CLI (``operators.fused.*``,
+``plans.extract.*`` and the ``state.manifest`` reads) run on the probe
+shard: the first parquet shard of the extraction input (2,002 documents on
+``extract_mixed``, the whole side input on ``vector_topk``), and every
+count in those groups is of that shard.  Times are medians of at least two
+traced passes or of three probe calls.  ``plans.extract.self_s`` is timed
+directly: the ``extract()`` call runs the route probe and builds the plan,
+and the fused kernel runs only when its result is materialized, so no
+difference of two noisy medians is needed.  Counts come from what the
+program did (Spark's event log, reduced by job group, and what
+``extract()`` routed) or from the oracle's output.
 """
 
 from __future__ import annotations
 
-import inspect
 import os
 import statistics
 
@@ -30,33 +31,26 @@ _SIMILARITY = ("datapipe.similarity.ivf_topk",
 SIDE_PASSES = 3
 
 
-def _dir_bytes(path: str) -> int:
-    return sum(os.path.getsize(os.path.join(d, f))
-               for d, _, files in os.walk(path) for f in files)
-
-
-def overhead_frac(traced_times, untraced_times) -> float:
-    """Median traced pass / median untraced pass - 1, over passes that
-    alternate after warm-up.  A traced pass differs from an untraced one
-    only by the span wrappers and job-group calls (the event log is on for
-    the whole traced session), so the true cost sits below pass-to-pass
-    noise; a reading below zero is that noise, not a saving, and is
-    reported as 0 (the signed value goes to the log)."""
-    raw = statistics.median(traced_times) / statistics.median(
-        untraced_times) - 1
-    log(f"trace overhead, signed: {raw:+.4f}")
-    return max(raw, 0.0)
+def overhead_frac(tracer_s, traced_times, untraced_times) -> float:
+    """The tracer's own time in a traced pass (median) / the median
+    untraced pass.  The event log is on for the whole traced session, so a
+    traced pass differs from an untraced one only by the tracer's calls;
+    timing those calls gives their cost without pass-to-pass noise.  The
+    pass-time ratio of the untraced-traced-traced-untraced window is logged
+    beside it, signed: it carries that noise, a few percent either way."""
+    untraced = statistics.median(untraced_times)
+    log("trace overhead by pass time, signed: "
+        f"{statistics.median(traced_times) / untraced - 1:+.4f}")
+    return statistics.median(tracer_s) / untraced
 
 
 def layer_metrics(spark, tracer, run, w, args, work, *, session_s,
-                  warmup_passes, gcs, timed, traced_times,
+                  warmup_passes, gcs, timed, traced_times, tracer_s,
                   cpu_probe_s) -> dict:
     """Run the layer calls (session still up).  Returns the metrics that do
     not come from the event log, and which pass kind (``main`` or ``side``)
-    ran each of the extraction and vector layers."""
-    from vlm_ocr_doc_reader_spark.plans.extract import extract
-
-    tracer.tag = "p"
+    ran the vector layers."""
+    tracer.tag = "scan"
     for _ in range(wl.PROBE_REPS):
         with tracer.span("sources.scan"):
             wl.noop(spark.read.parquet(w.input))
@@ -67,34 +61,29 @@ def layer_metrics(spark, tracer, run, w, args, work, *, session_s,
                             n=wl.SIDE_VECTORS)
     else:
         ext = wl.ExtractMixed(os.path.join(work, "side-docs"), args.seed,
-                              procs=os.cpu_count() or 1,
-                              n_docs=wl.SIDE_DOCS, n_mega=1, shards=1)
+                              n_docs=wl.SIDE_DOCS, shards=1)
     side = vec if vec is not w else ext
     for k in range(SIDE_PASSES):
         tracer.begin_pass(f"s{k}", "side")
         run.one_pass(side, spark, "side", tracer,
                      keep=side.name == "extract_mixed")
-    tracer.tag = "p"
-    wl.extraction_probes(spark, tracer, ext)
+    routed = wl.extraction_probes(spark, tracer, ext)
     counts = wl.levels_probes(spark, tracer, os.path.join(work, "levels"),
                               args.seed)
 
     med = tracer.median
     out_dir, state_dir = ext.last_dirs
-    threshold = inspect.signature(extract).parameters["fused_max_spans"] \
-        .default
-    sizes = ext.template.bounds[1:] - ext.template.bounds[:-1]
     values = {
         "sources.session_start_s": session_s,
         "sources.scan_s": med("sources.scan"),
         "sources.input_bytes": w.input_bytes,
         "operators.fused.extract_rows_s": med("operators.fused.extract_rows"),
-        "operators.fused.docs": ext.items,
-        "operators.fused.spans_in": ext.shape["spans"],
-        "operators.fused.spans_out": ext.spans_out,
+        "operators.fused.docs": ext.probe_shape["docs"],
+        "operators.fused.spans_in": ext.probe_shape["spans_in"],
+        "operators.fused.spans_out": ext.probe_shape["spans_out"],
         "plans.extract.extract_s": med("plans.extract.extract"),
         "plans.extract.self_s": med("plans.extract.self"),
-        "plans.extract.mega_docs_routed": int((sizes > threshold).sum()),
+        "plans.extract.mega_docs_routed": routed,
         "state.manifest.pending_docs_s": med("state.manifest.pending_docs"),
         "state.manifest.commit_phase_s": med("state.manifest.commit_phase"),
         "state.manifest.read_committed_s":
@@ -103,11 +92,10 @@ def layer_metrics(spark, tracer, run, w, args, work, *, session_s,
             med("state.manifest.resume_pending"),
         "state.manifest.manifest_rows": wl.gates.manifest_rows(state_dir),
         "cli.output_write_s": med("cli.output_write"),
-        "cli.output_bytes": _dir_bytes(out_dir),
+        "cli.output_bytes": wl.size_bytes(out_dir),
         "cli.resume_s": med("cli.resume"),
         "datapipe.similarity.ivf_topk_s": med(_SIMILARITY[0]),
         "datapipe.similarity.lsh_topk_multiprobe_s": med(_SIMILARITY[1]),
-        "datapipe.similarity.pairs_scored": vec.pairs,
         "jvm.gc_s_per_pass": statistics.median(gcs),
         "jvm.peak_rss_mb": hwm_mb(run.jvm_pid),
         "harness.warmup_passes": warmup_passes,
@@ -120,11 +108,10 @@ def layer_metrics(spark, tracer, run, w, args, work, *, session_s,
         "plans.levels.verify_s": med("plans.levels.verify"),
         "plans.levels.registry_rows": counts["registry_rows"],
         "operators.vote.majority_vote_s": med("operators.vote.majority_vote"),
-        "trace.overhead_frac": overhead_frac(traced_times, timed),
+        "trace.overhead_frac": overhead_frac(tracer_s, traced_times, timed),
         "host.cpu_probe_s": cpu_probe_s,
     }
-    roles = {"ext": "main" if ext is w else "side",
-             "vec": "main" if vec is w else "side",
+    roles = {"vec": "main" if vec is w else "side",
              "vec_input_bytes": vec.input_bytes}
     return values, roles
 
@@ -143,13 +130,16 @@ def event_metrics(event_dir: str, tags: dict, roles: dict) -> dict:
                 and (spans is None or name.split("|", 1)[1] in spans)))
         return statistics.median(vals)
 
-    ext, vec = roles["ext"], roles["vec"]
+    vec = roles["vec"]
+    fused = ("operators.fused.extract_rows",)
     py_sent = per_pass(vec, "py_bytes_sent", _SIMILARITY)
     return {
-        "operators.fused.py_bytes_sent": per_pass(ext, "py_bytes_sent"),
+        "operators.fused.py_bytes_sent":
+            per_pass("probe", "py_bytes_sent", fused),
         "operators.fused.py_bytes_returned":
-            per_pass(ext, "py_bytes_returned"),
-        "operators.fused.py_worker_s": per_pass(ext, "py_worker_ms") / 1000,
+            per_pass("probe", "py_bytes_returned", fused),
+        "operators.fused.py_worker_s":
+            per_pass("probe", "py_worker_ms", fused) / 1000,
         "datapipe.similarity.py_bytes_sent": py_sent,
         "datapipe.similarity.py_worker_s":
             per_pass(vec, "py_worker_ms", _SIMILARITY) / 1000,
@@ -157,6 +147,8 @@ def event_metrics(event_dir: str, tags: dict, roles: dict) -> dict:
             per_pass(vec, "broadcast_bytes", _SIMILARITY),
         "datapipe.similarity.exchange_bytes":
             per_pass(vec, "exchange_bytes", _SIMILARITY),
+        "datapipe.similarity.pairs_scored":
+            per_pass(vec, "pairs_scored", _SIMILARITY),
         "datapipe.similarity.py_bytes_per_input_byte":
             py_sent / roles["vec_input_bytes"],
         "spark.jobs_per_pass": per_pass("main", "jobs"),

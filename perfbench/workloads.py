@@ -16,6 +16,8 @@ that follows every pass, outside the timed window.
 
 from __future__ import annotations
 
+import importlib
+import multiprocessing as mp
 import os
 import shutil
 import statistics
@@ -23,14 +25,16 @@ import time
 from contextlib import contextmanager, nullcontext
 from unittest import mock
 
+import pyarrow as pa
 import pyarrow.compute as pc
 
 import corpus
 import gates
 
-# extract_mixed: 8,000 documents plus the 8 fixture edge cases; 4 mega
-# documents, each far below extract()'s fused_max_spans routing threshold
-DOCS, MEGA_DOCS, MEGA_SPANS = 8_000, 4, 5_000
+# extract_mixed: 8,000 fixture documents plus its 8 edge cases; the
+# generator makes 8 of them mega documents, each far below extract()'s
+# fused_max_spans routing threshold
+DOCS, MEGA_SPANS = 8_000, 2_500
 # vector_topk: query vectors (every vector queries the whole set)
 VECTORS, CLUSTERS, DIM = 800, 12, 64
 # shards for the layers a workload does not exercise itself, and the fixed
@@ -60,6 +64,7 @@ class Tracer:
         self.tag = "-"
         self.times: dict[str, list[float]] = {}
         self.tags: dict[str, list[str]] = {}
+        self.own_s = 0.0                # time spent changing job groups
         self._stack: list[list] = []    # [name, start, is_mark]
 
     def begin_pass(self, tag: str, kind: str) -> None:
@@ -69,11 +74,13 @@ class Tracer:
         self.tags.setdefault(kind, []).append(tag)
 
     def _regroup(self):
+        t0 = time.perf_counter()
         if self._stack:
             name = self._stack[-1][0]
             self._sc.setJobGroup(f"{self.tag}|{name}", name)
         else:
             self._sc.setLocalProperty("spark.jobGroup.id", None)
+        self.own_s += time.perf_counter() - t0
 
     def _pop(self):
         name, t0, _ = self._stack.pop()
@@ -112,25 +119,36 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def size_bytes(path: str) -> int:
+    """Bytes in a file, or in all files under a directory."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(path) for f in files)
+
+
 class ExtractMixed:
     name = "extract_mixed"
 
-    def __init__(self, work: str, seed: int, procs: int,
-                 n_docs: int = DOCS, n_mega: int = MEGA_DOCS,
+    def __init__(self, work: str, seed: int, n_docs: int = DOCS,
                  shards: int = 4):
         self.work = work
-        self.template = corpus.DocTemplate(n_docs, n_mega, MEGA_SPANS)
-        texts = self.template.render(seed)
-        self.shape = self.template.shape(texts)
         self.input = os.path.join(work, "documents")
-        self.input_bytes = self.template.write(texts, self.input, shards)
-        # the layer probes read the first shard only
-        self.probe_input = os.path.join(self.input, "part-00000.parquet")
-        docs = self.template.docs(texts)
-        self.items = len(docs)
-        self.expected = gates.expected_extraction(docs, procs)
-        self.spans_out = pc.sum(
-            pc.list_value_length(self.expected["spans"])).as_py()
+        structure, self.expected = prepare_documents(self.input, n_docs,
+                                                     seed, shards)
+        self.input_bytes = size_bytes(self.input)
+        self.items = len(structure)
+        # the layer probes read the first shard only: docs[0::shards]
+        self.probe_input = (self.input if shards == 1 else
+                            os.path.join(self.input, "part-00000.parquet"))
+        probe_docs = structure[::shards]
+        probe_out = self.expected.filter(pc.is_in(
+            self.expected["doc_id"], pa.array([d for d, _ in probe_docs])))
+        self.probe_shape = {
+            "docs": len(probe_docs),
+            "spans_in": sum(len(spans) for _, spans in probe_docs),
+            "spans_out": pc.sum(
+                pc.list_value_length(probe_out["spans"])).as_py()}
         self._n = 0
         self.last_dirs = None
 
@@ -165,6 +183,36 @@ class ExtractMixed:
         else:
             _remove(out, state)
         return bad
+
+
+def _prepare_shard(docs, seed, path):
+    from vlm_ocr_doc_reader_spark.fixtures.generate import (
+        write_documents_parquet)
+    docs = corpus.reword(docs, seed)
+    write_documents_parquet(docs, path)
+    return gates.oracle_rows(docs)
+
+
+def prepare_documents(path: str, n_docs: int, seed: int, shards: int):
+    """Write the extraction input for ``seed`` to ``path`` and compute the
+    oracle's output for it.  Returns the structure corpus (the documents
+    before re-wording) and the oracle table.  Each shard is re-worded,
+    written and run through the pure-Python oracle in a spawned worker of
+    its own; the shards are the round-robin split ``docs[s::shards]`` in
+    ``part-<s>.parquet`` files that ``write_documents_parquet`` makes, so the
+    mega documents land in different files.  One shard is a single file at
+    ``path``."""
+    structure = corpus.structure(n_docs, MEGA_SPANS)
+    paths = [path]
+    os.makedirs(path if shards > 1 else os.path.dirname(path),
+                exist_ok=True)
+    if shards > 1:
+        paths = [os.path.join(path, f"part-{s:05d}.parquet")
+                 for s in range(shards)]
+    with mp.get_context("spawn").Pool(shards) as pool:
+        parts = pool.starmap(_prepare_shard, [
+            (structure[s::shards], seed, p) for s, p in enumerate(paths)])
+    return structure, gates.oracle_table(r for part in parts for r in part)
 
 
 @contextmanager
@@ -209,7 +257,6 @@ class VectorTopk:
         self.expected = gates.vector_oracles(
             self.input, contract._oracle_ivf_topk(),
             contract._oracle_lsh_multiprobe())
-        self.pairs = self.expected["ivf_pairs"] + self.expected["lsh_pairs"]
 
     def run_pass(self, spark, tracer=NullTracer()):
         from vlm_ocr_doc_reader_spark.datapipe.similarity import (
@@ -234,19 +281,30 @@ class VectorTopk:
 # Layer calls the traced run makes after its timed window.  A lazy call is
 # materialized with the no-op sink, so its time covers the work it plans.
 
-def extraction_probes(spark, tracer, ext: ExtractMixed) -> None:
+def extraction_probes(spark, tracer, ext: ExtractMixed) -> int:
     """Each extraction-side layer on the first shard of ``ext``'s input,
     PROBE_REPS times, and a CLI re-run over the whole committed input.
     Needs ``ext.last_dirs`` from a kept traced CLI pass (the committed
-    output and state the resume-side calls read)."""
+    output and state the resume-side calls read).  Returns the number of
+    documents ``extract()`` routed to its declarative branch."""
     from vlm_ocr_doc_reader_spark import cli
     from vlm_ocr_doc_reader_spark.operators.fused import fused_extract_rows
-    from vlm_ocr_doc_reader_spark.plans.extract import extract
+    # the plans package exports extract() under the submodule's name
+    extract_mod = importlib.import_module(
+        "vlm_ocr_doc_reader_spark.plans.extract")
     from vlm_ocr_doc_reader_spark.state.manifest import (
         pending_docs, read_committed)
     out, state = ext.last_dirs
     fresh = os.path.join(ext.work, "state-fresh")
-    for _ in range(PROBE_REPS):
+    routed = []     # what extract() hands its declarative branch
+    flat = extract_mod.extract_flat
+
+    def extract_flat(documents, *a, **k):
+        routed.append(documents)
+        return flat(documents, *a, **k)
+
+    for r in range(PROBE_REPS):
+        tracer.begin_pass(f"p{r}", "probe")
         docs = spark.read.parquet(ext.probe_input)
         with tracer.span("state.manifest.pending_docs"):
             noop(pending_docs(docs, spark, fresh, "extract"))
@@ -256,15 +314,17 @@ def extraction_probes(spark, tracer, ext: ExtractMixed) -> None:
             noop(read_committed(spark, out, state, "extract"))
         with tracer.span("operators.fused.extract_rows"):
             noop(fused_extract_rows(docs))
-        with tracer.span("plans.extract.extract"):
+        with tracer.span("plans.extract.extract"), \
+                mock.patch.object(extract_mod, "extract_flat", extract_flat):
             # extract() itself runs the mega-document route probe and plans;
             # the fused kernel runs when the result is materialized
             with tracer.span("plans.extract.self"):
-                df = extract(docs)
+                df = extract_mod.extract(docs)
             noop(df)
         with tracer.span("cli.resume"):
             cli.main(["extract", "--input", ext.input, "--output", out,
                       "--state", state])
+    return sum(df.count() for df in routed) // PROBE_REPS
 
 
 def levels_probes(spark, tracer, work: str, seed: int) -> dict:
@@ -276,9 +336,12 @@ def levels_probes(spark, tracer, work: str, seed: int) -> dict:
     from vlm_ocr_doc_reader_spark.plans import levels
     from vlm_ocr_doc_reader_spark.plans.extract import classified_spans
 
-    tmpl = corpus.DocTemplate(LEVELS_DOCS, levels=True)
+    from vlm_ocr_doc_reader_spark.fixtures.generate import (
+        write_documents_parquet)
+
     path = os.path.join(work, "levels-docs")
-    tmpl.write(tmpl.render(seed), path, shards=2)
+    write_documents_parquet(corpus.levels_documents(LEVELS_DOCS, seed), path,
+                            shards=2)
     votes = os.path.join(work, "vote-samples")
     spark.createDataFrame(corpus.vote_samples(VOTE_ENTITIES, seed),
                           "entity_id string, axis_idx int, value string, "
@@ -286,6 +349,7 @@ def levels_probes(spark, tracer, work: str, seed: int) -> dict:
         .write.mode("overwrite").parquet(votes)
     reg = {s: os.path.join(work, f"registry-{s}")
            for s in ("scan", "resolve", "verify")}
+    tracer.tag = "levels"
     for _ in range(PROBE_REPS):
         docs = spark.read.parquet(path)
         with tracer.span("operators.classify.classified_spans"):
