@@ -24,6 +24,9 @@ its bucket sizes do move with the seed.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import pickle
 import random
 import re
 from collections import Counter
@@ -32,10 +35,15 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from vlm_ocr_doc_reader_spark.fixtures import generate
 from vlm_ocr_doc_reader_spark.fixtures.generate import (
     _BOILER, _SHORT_JUNK, _WORDS, generate_documents)
 
 STRUCTURE_SEED = 20261017
+# the structure corpus does not depend on the run seed, so runs in one
+# checkout share it here (git ignores perfbench/.work/)
+CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".work",
+                     "cache")
 _WORD = re.compile(r"[^\W\d_]+")
 _FIXED_TEXTS = frozenset(_BOILER) | frozenset(_SHORT_JUNK)
 
@@ -75,9 +83,25 @@ def structure(n_docs: int, mega_spans: int) -> list:
     """[(doc_id, [(kind, text, media_ref, offset), ...])]: the fixture
     corpus of the structure seed.  The generator adds its 8 edge-case
     documents and max(3, n_docs // 1000) mega documents of ``mega_spans``
-    spans each."""
-    return generate_documents(n_docs, seed=STRUCTURE_SEED,
+    spans each.  The first call in a checkout writes it to ``CACHE``, keyed
+    by the generator's source, and later calls read it from there."""
+    with open(generate.__file__, "rb") as f:
+        key = hashlib.sha256(f.read()).hexdigest()[:16]
+    path = os.path.join(
+        CACHE, f"structure-{key}-{STRUCTURE_SEED}-{n_docs}-{mega_spans}.pkl")
+    try:
+        with open(path, "rb") as f:
+            return pickle.load(f)
+    except (OSError, EOFError, pickle.UnpicklingError):
+        pass
+    docs = generate_documents(n_docs, seed=STRUCTURE_SEED,
                               mega_spans=mega_spans)
+    os.makedirs(CACHE, exist_ok=True)
+    tmp = f"{path}.{os.getpid()}"
+    with open(tmp, "wb") as f:
+        pickle.dump(docs, f, protocol=pickle.HIGHEST_PROTOCOL)
+    os.replace(tmp, path)
+    return docs
 
 
 def documents(n_docs: int, mega_spans: int, seed: int) -> list:

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import ctypes
 import os
+import signal
 import sys
 import time
 
@@ -38,6 +40,64 @@ def _children() -> dict:
     return kids
 
 
+def adopt_orphans() -> None:
+    """Make this process the child subreaper of everything it starts, so a
+    descendant whose parent ends (a PySpark daemon after the JVM, a worker
+    after its daemon) is re-parented here and ``stop_descendants`` can wait
+    for it."""
+    PR_SET_CHILD_SUBREAPER = 36
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0,
+                                            0)
+
+
+def descendants(pid: int) -> list[int]:
+    """Pids of every process under ``pid``."""
+    kids, found, stack = _children(), [], [pid]
+    while stack:
+        for child in kids.get(stack.pop(), ()):
+            stack.append(child)
+            found.append(child)
+    return found
+
+
+def _reap() -> None:
+    """Collect the exit status of every child that has ended."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def stop_descendants(grace_s: float = 10.0) -> None:
+    """Stop every process this run started and wait until each has ended:
+    the multiprocessing resource tracker is closed as its module does it;
+    anything else left gets SIGTERM, and SIGKILL after ``grace_s``."""
+    from multiprocessing import resource_tracker
+    stop = getattr(resource_tracker._resource_tracker, "_stop", None)
+    if stop:
+        stop()
+    deadline, sig, seen = time.monotonic() + grace_s, signal.SIGTERM, set()
+    while True:
+        _reap()
+        pids = descendants(os.getpid())
+        if not pids:
+            if seen:
+                log(f"stopped {len(seen)} leftover processes")
+            return
+        seen.update(pids)
+        if time.monotonic() > deadline:
+            sig = signal.SIGKILL
+        for pid in pids:
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        time.sleep(0.1)
+
+
 def hwm_mb(pid: int) -> float:
     try:
         with open(f"/proc/{pid}/status") as f:
@@ -52,16 +112,14 @@ def hwm_mb(pid: int) -> float:
 def python_workers(jvm_pid: int) -> list[int]:
     """Pids of the Python worker processes (and their daemon) under the
     JVM."""
-    kids, found, stack = _children(), [], [jvm_pid]
-    while stack:
-        for pid in kids.get(stack.pop(), ()):
-            stack.append(pid)
-            try:
-                with open(f"/proc/{pid}/cmdline", "rb") as f:
-                    if b"pyspark" in f.read():
-                        found.append(pid)
-            except OSError:
-                continue
+    found = []
+    for pid in descendants(jvm_pid):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if b"pyspark" in f.read():
+                    found.append(pid)
+        except OSError:
+            continue
     return found
 
 

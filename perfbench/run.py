@@ -1,7 +1,7 @@
 """Benchmark entry point: one closed-loop run of one workload.
 
     python3 perfbench/run.py --cores 2 --workload extract_mixed --seed 1 \
-        --seconds 10 --trace 0
+        --seconds 8 --trace 0
 
 Run from the repository root.  The run makes its inputs from ``--seed``,
 starts one Spark session on ``local[--cores]``, runs one cold pass (with the
@@ -25,12 +25,14 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import time
 
-from harness import (cpu_probe, gc_seconds, hwm_mb, jit_seconds, log,
-                     python_workers, start_session, stop_session)
+from harness import (adopt_orphans, cpu_probe, gc_seconds, hwm_mb,
+                     jit_seconds, log, python_workers, start_session,
+                     stop_descendants, stop_session)
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -39,6 +41,7 @@ WARM_MIN = 3            # warm-up passes always run
 WARM_TOL = 0.03         # a pass at least 3% under the best so far improves
 WARM_STABLE = 2         # after WARM_MIN, warm-up ends after this many passes
 WARM_CAP_S = 12.0       # that do not improve, or once it has taken this long
+TIMED_MIN = 2           # timed passes in an untraced window
 TRACED_MIN_EACH = 2     # traced and untraced passes in a traced window
 MAX_FAILED = 3          # failed passes after which the run stops passing
 
@@ -103,6 +106,9 @@ def main(argv=None) -> int:
               "run from the repository root", file=sys.stderr)
         return 2
 
+    # every process the run starts ends before it does, on every way out
+    adopt_orphans()
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     work = os.path.join(HERE, ".work", f"{args.workload}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
@@ -118,6 +124,7 @@ def main(argv=None) -> int:
     try:
         metrics, run = measure(args, work)
     finally:
+        stop_descendants()
         shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({"correct": run.failed == 0 and run.attempted > 0,
                       "attempted": run.attempted, "failed": run.failed,
@@ -190,8 +197,9 @@ def _passes(spark, w, run, args, work, session_s, probes) -> tuple:
     timed, traced_times, tracer_s, gcs = [], [], [], []
     t_end = time.perf_counter() + args.seconds
     k = 0
-    while run.failed <= MAX_FAILED and (time.perf_counter() < t_end or (
-            tracer and min(len(timed), len(traced_times)) < TRACED_MIN_EACH)):
+    while run.failed <= MAX_FAILED and (
+            time.perf_counter() < t_end or len(timed) < TIMED_MIN or (
+                tracer and len(traced_times) < TRACED_MIN_EACH)):
         # U T T U: a trend over the window cancels between the two kinds
         use = tracer if tracer and k % 4 in (1, 2) else None
         if use:

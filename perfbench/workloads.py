@@ -41,6 +41,7 @@ VECTORS, CLUSTERS, DIM = 800, 12, 64
 # shard for the classify / levels / vote layers
 SIDE_DOCS, SIDE_VECTORS, LEVELS_DOCS, VOTE_ENTITIES = 1_000, 300, 150, 500
 PROBE_REPS = 3      # calls per layer probe; self time needs >= 3 per side
+LEVELS_REPS = 1     # calls per classify / levels / vote probe
 
 
 class NullTracer:
@@ -209,9 +210,14 @@ def prepare_documents(path: str, n_docs: int, seed: int, shards: int):
     if shards > 1:
         paths = [os.path.join(path, f"part-{s:05d}.parquet")
                  for s in range(shards)]
-    with mp.get_context("spawn").Pool(shards) as pool:
+    pool = mp.get_context("spawn").Pool(shards)
+    try:
         parts = pool.starmap(_prepare_shard, [
             (structure[s::shards], seed, p) for s, p in enumerate(paths)])
+        pool.close()
+    finally:
+        pool.terminate()
+        pool.join()
     return structure, gates.oracle_table(r for part in parts for r in part)
 
 
@@ -350,7 +356,7 @@ def levels_probes(spark, tracer, work: str, seed: int) -> dict:
     reg = {s: os.path.join(work, f"registry-{s}")
            for s in ("scan", "resolve", "verify")}
     tracer.tag = "levels"
-    for _ in range(PROBE_REPS):
+    for _ in range(LEVELS_REPS):
         docs = spark.read.parquet(path)
         with tracer.span("operators.classify.classified_spans"):
             noop(classified_spans(docs))
